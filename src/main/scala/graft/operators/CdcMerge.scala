@@ -108,6 +108,10 @@ object CdcMerge {
     *                         un-released persist per micro-batch would
     *                         accumulate without bound — pass false and
     *                         own the lifecycle.
+    * @param insertUnmatchedDeletes keep the reference's NOT MATCHED
+    *                         insert of delete rows; false makes a delete
+    *                         act only on a matched row (a MoR drain,
+    *                         whose unmatched deletes cancel side inserts)
     * @return the post-merge target content, with the target's schema
     */
   def merge(
@@ -117,7 +121,8 @@ object CdcMerge {
       mergeCols: Seq[String],
       deleteOn: Option[(String, Seq[String])],
       broadcastStaging: Boolean = true,
-      persistStaging: Boolean = true): DataFrame = {
+      persistStaging: Boolean = true,
+      insertUnmatchedDeletes: Boolean = true): DataFrame = {
 
     val targetSchema = target.schema
     val targetCols = targetSchema.fieldNames.toSeq
@@ -169,8 +174,14 @@ object CdcMerge {
       .join(hinted(stagingKeys), keys, "left_semi")
 
     // Inserts: staged rows whose key is absent from the target — including
-    // unmatched delete-rows (reference renders no NOT MATCHED predicate).
-    val inserts = stagingOnce
+    // unmatched delete-rows (reference renders no NOT MATCHED predicate)
+    // unless the caller turned that quirk off.
+    val insertable = deleteOn match {
+      case Some((dc, vals)) if !insertUnmatchedDeletes =>
+        stagingOnce.filter(!coalesce(col(dc).isin(vals: _*), lit(false)))
+      case _ => stagingOnce
+    }
+    val inserts = insertable
       .join(hinted(matchedKeys), keys, "left_anti")
       .select(targetCols.map { c =>
         if (insertCols.contains(c)) col(c).cast(targetSchema(c).dataType).as(c)
@@ -188,11 +199,13 @@ object CdcMerge {
       deleteCol: String = "Op",
       deleteVals: Seq[String] = Seq("D"),
       broadcastStaging: Boolean = true,
-      persistStaging: Boolean = true): DataFrame = {
+      persistStaging: Boolean = true,
+      insertUnmatchedDeletes: Boolean = true): DataFrame = {
     val plan = prepareMergeColumns(target.schema, staging.schema, keys)
     val del =
       if (deleteActive(staging.schema, deleteCol, deleteVals)) Some((deleteCol, deleteVals))
       else None
-    merge(target, staging, keys, plan.cols, del, broadcastStaging, persistStaging)
+    merge(target, staging, keys, plan.cols, del, broadcastStaging, persistStaging,
+      insertUnmatchedDeletes)
   }
 }

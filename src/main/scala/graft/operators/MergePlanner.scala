@@ -129,16 +129,26 @@ object MergePlanner {
     * accumulated net changes), then merges. Readers of the pair use
     * [[resolvedView]] between drains. [[graft.pipeline.CdcPipeline]]
     * runs the same protocol per table.
+    *
+    * SIDE INVARIANT: every base generation of `morSide` is EMPTY — the
+    * bootstrap commits the empty relation and a drain resets to one —
+    * so all live data is in the home and the side holds scatter only
+    * while a delta follows its newest base
+    * ([[graft.sources.MorStore.deltaPending]]). Without a pending delta
+    * the side contributes nothing, and [[drain]] and [[resolvedView]]
+    * skip it.
     */
   /** The resolved current view of a CoW home with an undrained MoR
     * side: net side ops applied on top (deletes drop, upserts replace;
     * upsert rows are projected to the home schema — scatter batches
     * may carry staging metadata the home's merge intersection would
     * have dropped, and may lack columns a later evolution added).
+    * Resolves the side only while a delta is pending; otherwise this
+    * is the home read alone.
     */
   def resolvedView(cow: BucketedTableStore, morSide: MorStore): DataFrame = {
     val home = cow.read()
-    if (morSide.isEmpty) home
+    if (!morSide.deltaPending) home
     else {
       val net = morSide.netChanges()
       val upserts = net.filter(col(morSide.OpCol) === "U")
@@ -194,7 +204,9 @@ object MergePlanner {
               .emptyRDD[org.apache.spark.sql.Row], rowSchema),
             freshTs(morSide))
         }
-        morSide.commitDelta(delta, freshTs(morSide))
+        // evolved columns are admitted: resolvedView projects upserts to
+        // the home schema and the drain's merge intersects columns
+        morSide.commitDelta(delta, freshTs(morSide), allowEvolution = true)
       case _ =>
         // fold any accumulated scatter home first — per-key apply
         // order must match the batch arrival order
@@ -215,7 +227,14 @@ object MergePlanner {
     * included), so N scattered MorDelta batches cost one amortized
     * rewrite instead of N; the broadcast hint follows the net batch's
     * size through the same threshold the per-batch routing uses.
-    * Returns touched bucket count (0 when the side was already empty).
+    * Runs only while a delta is pending
+    * ([[graft.sources.MorStore.deltaPending]]); returns touched bucket
+    * count, 0 when nothing was pending.
+    *
+    * A net D only DELETES, never inserts: [[normalizeDelta]] already
+    * turned every unmatched delete into a U, so a net D whose key the
+    * home lacks is a key an earlier side delta inserted — the insert
+    * and the delete cancel.
     *
     * The reset commits an empty BASE generation, so a crash between
     * the merge and the reset replays the net changes — idempotent,
@@ -224,13 +243,14 @@ object MergePlanner {
     */
   def drain(cow: BucketedTableStore, morSide: MorStore,
       th: Thresholds = Thresholds()): Int =
-    if (morSide.isEmpty) 0
+    if (!morSide.deltaPending) 0
     else {
       val net = morSide.netChanges()
       val rows = net.count()
       val touched = cow.merge(net.drop(morSide.SeqCol),
         deleteCol = morSide.OpCol, deleteVals = Seq("D"),
-        broadcastStaging = rows <= th.broadcastMaxRows)
+        broadcastStaging = rows <= th.broadcastMaxRows,
+        insertUnmatchedDeletes = false)
       morSide.commitBase(net.filter(lit(false)).drop(
         morSide.OpCol, morSide.SeqCol), freshTs(morSide))
       touched

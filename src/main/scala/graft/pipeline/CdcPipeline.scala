@@ -76,8 +76,8 @@ final class CdcPipeline(
 
   /** The table's complete current state: the CoW home with any
     * undrained side-store scatter resolved on top (net per-key ops —
-    * deletes drop, upserts replace). With an empty side this is
-    * exactly `storeFor(...).read()`.
+    * deletes drop, upserts replace). With no delta pending on the side
+    * this is exactly `storeFor(...).read()`.
     */
   def readTable(table: String): DataFrame = {
     val keys = tableKeys.keysFor(table)
@@ -183,7 +183,9 @@ final class CdcPipeline(
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                   rowSchema), freshSideTs(side))
               }
-              side.commitDelta(delta, freshSideTs(side))
+              // evolved columns are admitted: readTable projects upserts
+              // to the home schema and the drain's merge intersects columns
+              side.commitDelta(delta, freshSideTs(side), allowEvolution = true)
               0
             case chosen =>
               MergePlanner.drain(store, side)

@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 import graft.operators.CdcMerge
 
@@ -22,7 +22,12 @@ import graft.operators.CdcMerge
   * A merge then:
   *   1. computes the distinct buckets touched by the staged keys (≤ batch
   *      size, usually ≪ N);
-  *   2. reads ONLY those partitions (partition-pruned scan);
+  *   2. reads ONLY those partitions: the scan is built over the touched
+  *      `__bucket=b` directories that exist, under the sidecar schema, so
+  *      listing is O(touched) too — neither the root nor the untouched
+  *      buckets are listed, and a batch within Spark's parallel-discovery
+  *      threshold (32 paths by default) is listed on the driver without a
+  *      Spark job;
   *   3. runs the broadcast [[CdcMerge]] against that slice;
   *   4. writes the slice to a temp dir and atomically swaps the affected
   *      bucket directories (write-temp-then-rename — the moral equivalent
@@ -37,7 +42,8 @@ import graft.operators.CdcMerge
   *
   * Sizing: pick `numBuckets` so a bucket ≈ 100-500 MB at target scale
   * (100 TB / 256 MB ≈ 400k buckets; the bucket column is a directory
-  * partition, so very large N costs listing time — at true 100 TB this
+  * partition, so very large N costs listing time on full-table reads, while
+  * a merge lists only its touched buckets — at true 100 TB this
   * layout maps onto a partitioned catalog table with the same key scheme).
   */
 final class BucketedTableStore(
@@ -139,22 +145,39 @@ final class BucketedTableStore(
       Some(DataType.fromJson(new String(bytes, "UTF-8")).asInstanceOf[StructType])
     }
 
-  /** Raw read including the bucket partition column; survives a fully
-    * emptied table via the sidecar schema.
+  /** Raw read including the bucket partition column, of the whole table
+    * or of `buckets` only; survives a fully emptied table via the sidecar
+    * schema. With the sidecar, a bucket read lists just the existing
+    * `__bucket=b` directories (under `basePath`, so the partition column
+    * still resolves); without it, the whole root is read and filtered.
     */
-  private def readRaw(): DataFrame = readSchemaSidecar() match {
-    case Some(s) =>
-      spark.read
-        .schema(s.add(StructField(BucketCol, IntegerType, nullable = true)))
-        .parquet(path)
-    case None => spark.read.parquet(path)
-  }
+  private[graft] def readRaw(buckets: Option[Seq[Int]] = None): DataFrame =
+    readSchemaSidecar() match {
+      case Some(s) =>
+        val reader = spark.read
+          .schema(s.add(StructField(BucketCol, IntegerType, nullable = true)))
+        buckets match {
+          case None => reader.parquet(path)
+          case Some(bs) =>
+            val dirs = bs.map(b => new Path(path, s"$BucketCol=$b")).filter(fs.exists)
+            reader.option("basePath", path).parquet(dirs.map(_.toString): _*)
+        }
+      case None =>
+        val all = spark.read.parquet(path)
+        buckets.fold(all)(bs => all.filter(col(BucketCol).isin(bs.map(Integer.valueOf): _*)))
+    }
 
   /** Full-table read (partition column dropped). */
   def read(): DataFrame = readRaw().drop(BucketCol)
 
-  /** Table schema without the bucket column. */
-  def schema: StructType = read().schema
+  /** Table schema without the bucket column: the sidecar's, made nullable
+    * as Spark's file source makes a read schema — equal to `read().schema`
+    * without listing the table.
+    */
+  def schema: StructType = readSchemaSidecar() match {
+    case Some(s) => asNullable(s).asInstanceOf[StructType]
+    case None => read().schema
+  }
 
   /** Apply schema evolution: append safe new columns (nullable) to the
     * stored schema — the ALTER TABLE ADD COLUMN ... NULL of the reference
@@ -165,12 +188,15 @@ final class BucketedTableStore(
     if (result.columnsAdded.nonEmpty)
       writeSchemaSidecar(graft.operators.SchemaEvolution.evolve(schema, result))
 
-  /** Merge one deduplicated staging batch. Returns touched bucket count. */
+  /** Merge one deduplicated staging batch. Returns touched bucket count.
+    * `insertUnmatchedDeletes` is [[CdcMerge.merge]]'s.
+    */
   def merge(
       staging: DataFrame,
       deleteCol: String = "Op",
       deleteVals: Seq[String] = Seq("D"),
-      broadcastStaging: Boolean = true): Int = {
+      broadcastStaging: Boolean = true,
+      insertUnmatchedDeletes: Boolean = true): Int = {
     require(exists, s"target $path not initialized")
     validateBucketCount()
     recoverInterruptedSwaps()
@@ -180,10 +206,8 @@ final class BucketedTableStore(
     val affected = stagingB.select(BucketCol).distinct().collect().map(_.getInt(0)).sorted
     if (affected.isEmpty) { stagingB.unpersist(); return 0 }
 
-    // 2. partition-pruned scan of only the affected buckets
-    val slice = readRaw()
-      .filter(col(BucketCol).isin(affected.map(Integer.valueOf).toSeq: _*))
-      .drop(BucketCol)
+    // 2. scan of only the affected buckets
+    val slice = readRaw(Some(affected.toSeq)).drop(BucketCol)
 
     // 3. merge on the slice — broadcast for CDC-file-sized batches, a
     // shuffle join when the caller (e.g. MergePlanner's ShuffleCow for
@@ -191,7 +215,8 @@ final class BucketedTableStore(
     // store owns the staging persist lifecycle — no inner persist that
     // would leak across micro-batches)
     val merged = CdcMerge(slice, stagingB.drop(BucketCol), keys, deleteCol, deleteVals,
-      broadcastStaging = broadcastStaging, persistStaging = false)
+      broadcastStaging = broadcastStaging, persistStaging = false,
+      insertUnmatchedDeletes = insertUnmatchedDeletes)
 
     // 4. temp write + per-bucket swap. Renames only, in two phases with a
     // trash dir: a crash mid-swap always leaves every bucket's data in
@@ -253,6 +278,17 @@ final class BucketedTableStore(
 
 object BucketedTableStore {
   val BucketCol = "__bucket"
+
+  /** `t` with every field, array element and map value nullable — what
+    * Spark's file source does to the data schema of every read.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   def create(
       spark: SparkSession,

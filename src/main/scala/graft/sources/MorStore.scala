@@ -300,26 +300,14 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
   /** (generation, kind) pairs ≤ the pointer, ascending — staged
     * generations beyond the pointer are invisible.
     */
-  private[graft] def generations(): Seq[(Long, String)] = {
-    val logged =
-      if (!fs.exists(logDir)) Seq.empty
-      else fs.listStatus(logDir).map(_.getPath.getName)
-        .filter(_.endsWith(".json")).map(_.stripSuffix(".json").toLong)
-        .sorted.toSeq
-    val visible =
-      if (!fs.exists(pointer)) logged
-      else {
-        val in = fs.open(pointer)
-        val last = scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        in.close()
-        logged.filter(_ <= last)
-      }
-    visible.map { g =>
-      val in = fs.open(new Path(logDir, s"$g.json"))
-      val s = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      g -> s.split(""""kind":"""")(1).takeWhile(_ != '"')
-    }
+  private[graft] def generations(): Seq[(Long, String)] =
+    visibleGenIds().map(g => g -> generationKind(g))
+
+  private def generationKind(g: Long): String = {
+    val in = fs.open(new Path(logDir, s"$g.json"))
+    val s = scala.io.Source.fromInputStream(in).mkString
+    in.close()
+    s.split(""""kind":"""")(1).takeWhile(_ != '"')
   }
 
   /** Commit timestamp of generation `g` (the streaming sink keys its
@@ -393,7 +381,14 @@ class MorStore(spark: SparkSession, root: String, keyCols: Seq[String]) {
   }
 
   /** True before the first visible commit. */
-  def isEmpty: Boolean = generations().isEmpty
+  def isEmpty: Boolean = visibleGenIds().isEmpty
+
+  /** True when a delta follows the newest base: there is scatter to
+    * drain or to resolve. One log listing plus one log-entry read,
+    * whatever the history length.
+    */
+  def deltaPending: Boolean =
+    visibleGenIds().lastOption.exists(generationKind(_) == "delta")
 
   // ── read (the MoR resolve) ──────────────────────────────────────────
 

@@ -39,11 +39,22 @@ class PipelineSpec extends AnyFunSuite {
     */
   def writeCdcFile(file: String, rows: Seq[(Long, String, Double, String, String, Long)]): Unit = {
     import spark.implicits._
+    writeSingleFile(file,
+      rows.map { case (id, v, a, op, lts, _) => (id, v, a, op, java.sql.Timestamp.valueOf(lts)) }
+        .toDF("id", "v", "amount", "Op", "load_timestamp"))
+  }
+
+  /** [[writeCdcFile]] with an extra `email` column. */
+  def writeEmailCdcFile(file: String, rows: Seq[(Long, String, Double, String, String, String)]): Unit = {
+    import spark.implicits._
+    writeSingleFile(file,
+      rows.map { case (id, v, a, e, op, lts) => (id, v, a, e, op, java.sql.Timestamp.valueOf(lts)) }
+        .toDF("id", "v", "amount", "email", "Op", "load_timestamp"))
+  }
+
+  def writeSingleFile(file: String, df: DataFrame): Unit = {
     val tmp = tmpDir() + "/out"
-    rows.map { case (id, v, a, op, lts, _) => (id, v, a, op, java.sql.Timestamp.valueOf(lts)) }
-      .toDF("id", "v", "amount", "Op", "load_timestamp")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
     val dest = new java.io.File(file)
     dest.getParentFile.mkdirs()
@@ -112,6 +123,32 @@ class PipelineSpec extends AnyFunSuite {
     val state = store.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(state.size == 50 && state(1L) == "v1-new")
     assert(!fs.exists(trash))
+  }
+
+  test("bucketed store: schema comes from the sidecar and equals the read schema") {
+    import spark.implicits._
+    val root = tmpDir()
+    // primitives, array elements and map values start non-nullable; the
+    // read makes them all nullable, and so must `schema`
+    val initial = Seq((1L, "a", Seq(1, 2), Map("x" -> 1)), (2L, "b", Seq(3), Map("y" -> 2)))
+      .toDF("id", "v", "xs", "m")
+    assert(!initial.schema("id").nullable)
+    val store = BucketedTableStore.create(spark, s"$root/t", Seq("id"), initial, numBuckets = 4)
+    assert(store.schema == store.read().schema)
+
+    store.evolveSchema(SchemaEvolution.diff(
+      initial.withColumn("email", lit("e")).schema, store.schema))
+    assert(store.schema.fieldNames.contains("email"))
+    assert(store.schema == store.read().schema)
+
+    // every row deleted: no part file is left to infer a schema from
+    store.merge(initial.select("id").withColumn("Op", lit("D")))
+    assert(store.read().count() == 0)
+    assert(store.schema == store.read().schema)
+
+    // a merge whose touched bucket has no directory reads an empty slice
+    store.merge(Seq((3L, "c", "I")).toDF("id", "v", "Op"))
+    assert(store.read().select("id", "v").as[(Long, String)].collect().toSeq == Seq((3L, "c")))
   }
 
   test("ledger: resetFailed counts only newly flipped rows") {
@@ -201,6 +238,98 @@ class PipelineSpec extends AnyFunSuite {
     assert(snapshot(home.read()) == expected,
       "home alone must be complete after the drain")
     assert(snapshot(pipe.readTable("users")) == expected)
+  }
+
+  test("pipeline: a CoW-routed file lists only its touched buckets (no listing job)") {
+    // 64 bucket dirs exceed Spark's parallel-discovery threshold (32), so
+    // any full listing of the table would start a distributed listing job
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 64)
+    pipe.initialLoad("users", (1L to 2000L).map(i => (i, s"v$i", i * 1.0)).toDF("id", "v", "amount"))
+    val file = s"$root/fair/users/2026/08/12/one.parquet"
+    writeCdcFile(file, Seq((5L, "five", 5.5, "U", "2026-08-12 00:00:00", 0L)))
+
+    val (out, jobs) = JobRecorder.record(spark)(pipe.processFile(file))
+    assert(out.asInstanceOf[CdcPipeline.Applied].touchedBuckets == 1)
+    assert(jobs.nonEmpty, "the recorder must see the apply's jobs")
+    assert(!jobs.exists(_.startsWith("Listing leaf files")),
+      "a CoW-routed apply must not list the table:\n" + jobs.mkString("\n"))
+    assert(pipe.readTable("users").filter(col("id") === 5L)
+      .select("v").as[String].collect().toSeq == Seq("five"))
+  }
+
+  test("adaptive merge: a column added by a CoW file is admitted by the next scattered file") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 8)
+    pipe.initialLoad("users", (1L to 200L).map(i => (i, s"v$i", i * 1.0)).toDF("id", "v", "amount"))
+    val side = pipe.morSideFor("users", Seq("id"))
+    def apply(f: String): Unit =
+      assert(pipe.processFile(f).isInstanceOf[CdcPipeline.Applied], f)
+
+    // scatter (side bootstraps a base), CoW (drains), CoW adding `email`
+    val d = s"$root/fair/users/2026/08"
+    writeCdcFile(s"$d/12/s1.parquet", (2L to 200L by 2).map(i =>
+      (i, "s1", i * 2.0, "U", "2026-08-12 00:00:00", 0L)))
+    apply(s"$d/12/s1.parquet")
+    assert(side.deltaPending)
+    writeCdcFile(s"$d/13/c1.parquet", Seq((1L, "c1", -1.0, "U", "2026-08-13 00:00:00", 0L)))
+    apply(s"$d/13/c1.parquet")
+    assert(!side.isEmpty && !side.deltaPending)
+    writeEmailCdcFile(s"$d/14/c2.parquet", Seq((3L, "c2", -3.0, "c@x.io", "U", "2026-08-14 00:00:00")))
+    apply(s"$d/14/c2.parquet")
+    // the next scattered file carries the column the home already has
+    writeEmailCdcFile(s"$d/15/s2.parquet", (5L to 200L by 5).map(i =>
+      (i, "s2", i * 3.0, s"$i@x.io", "U", "2026-08-15 00:00:00")))
+    apply(s"$d/15/s2.parquet")
+    assert(side.deltaPending)
+
+    val expected = (1L to 200L).map { i =>
+      if (i % 5 == 0) (i, "s2", i * 3.0, Some(s"$i@x.io"))
+      else if (i == 1L) (i, "c1", -1.0, None)
+      else if (i == 3L) (i, "c2", -3.0, Some("c@x.io"))
+      else if (i % 2 == 0) (i, "s1", i * 2.0, None)
+      else (i, s"v$i", i * 1.0, None)
+    }
+    val got = pipe.readTable("users").select("id", "v", "amount", "email")
+      .as[(Long, String, Double, Option[String])].collect().sortBy(_._1).toSeq
+    assert(got == expected)
+  }
+
+  test("adaptive merge: a key inserted then deleted across undrained deltas stays deleted") {
+    import spark.implicits._
+    val root = tmpDir()
+    val keys = TableKeys.parse("""{"users": "id"}""")
+    val pipe = new CdcPipeline(spark, s"$root/store", keys, numBuckets = 8)
+    pipe.initialLoad("users", (1L to 200L).map(i => (i, s"v$i", i * 1.0)).toDF("id", "v", "amount"))
+    val side = pipe.morSideFor("users", Seq("id"))
+    val d = s"$root/fair/users/2026/08"
+    // two scattered files, both undrained: 500 inserted by the first and
+    // deleted by the second; 777 is a lone delete of an absent key
+    writeCdcFile(s"$d/12/s1.parquet", (2L to 200L by 2).map(i =>
+      (i, "s1", i * 2.0, "U", "2026-08-12 00:00:00", 0L)) :+
+      ((500L, "new", 5.0, "I", "2026-08-12 00:00:00", 0L)))
+    writeCdcFile(s"$d/13/s2.parquet", (1L to 199L by 2).map(i =>
+      (i, "s2", i * 3.0, "U", "2026-08-13 00:00:00", 0L)) ++ Seq(
+      (500L, "new", 5.0, "D", "2026-08-13 00:00:00", 0L),
+      (777L, "ghost", 7.0, "D", "2026-08-13 00:00:00", 0L)))
+    Seq(s"$d/12/s1.parquet", s"$d/13/s2.parquet").foreach { f =>
+      assert(pipe.processFile(f).isInstanceOf[CdcPipeline.Applied], f)
+      assert(side.deltaPending, s"$f must route to the side")
+    }
+    def ids = pipe.readTable("users").select("id").as[Long].collect().toSet
+    assert(!ids.contains(500L) && ids.contains(777L))
+
+    // a CoW file drains the side: the net delete of 500 must not insert it
+    writeCdcFile(s"$d/14/c.parquet", Seq((1L, "c", -1.0, "U", "2026-08-14 00:00:00", 0L)))
+    assert(pipe.processFile(s"$d/14/c.parquet").isInstanceOf[CdcPipeline.Applied])
+    assert(!side.deltaPending)
+    val home = pipe.storeFor("users", Seq("id")).read().select("id").as[Long].collect().toSet
+    assert(home == (1L to 200L).toSet + 777L)
+    assert(ids == home)
   }
 
   test("pipeline: empty CDC file applies as a no-op and is ledgered") {

@@ -258,23 +258,30 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("bucket filter prunes partitions at the store scan (not post-read)") {
-    // the merge-path read (`isin` over the hive-partitioned __bucket
-    // column) must become a PartitionFilter — at 10⁵ buckets the scan
-    // lists only the touched directories instead of reading the table
+    // the merge-path read of touched buckets must not list the table: its
+    // file index holds only the touched bucket directories, so at 10⁵
+    // buckets a merge lists what it rewrites and nothing else
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.functions.col
     val root = java.nio.file.Files.createTempDirectory("planspec_bucket").toString
     val store = new sources.BucketedTableStore(spark, s"$root/t", Seq("k"), numBuckets = 16)
     import spark.implicits._
     store.initialize((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v"))
-    // the same hive-partitioned layout the merge path filters with isin
-    val pruned = spark.read.parquet(s"$root/t")
-      .filter(col(sources.BucketedTableStore.BucketCol)
-        .isin(Integer.valueOf(3), Integer.valueOf(7)))
-    val plan = initialPlanString(pruned)
-    assert(plan.contains("PartitionFilters: [") &&
-      plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("__bucket"),
-      "bucket isin must prune partitions:\n" + plan.take(3000))
+    val bucketCol = sources.BucketedTableStore.BucketCol
+    val pruned = store.readRaw(Some(Seq(3, 7)))
+    val indexes = pruned.queryExecution.optimizedPlan
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+    assert(indexes.size == 1, pruned.queryExecution.optimizedPlan.toString)
+    val touched = Set(s"$bucketCol=3", s"$bucketCol=7")
+    assert(indexes.head.rootPaths.map(_.getName).toSet == touched)
+    assert(indexes.head.inputFiles.nonEmpty &&
+      indexes.head.inputFiles.forall(f => touched.exists(t => f.contains(s"/$t/"))),
+      indexes.head.inputFiles.mkString("\n"))
+    // same rows as filtering the full read
+    val full = store.readRaw().filter(col(bucketCol).isin(3, 7))
+    assert(pruned.select(bucketCol).distinct().as[Int].collect().toSet == Set(3, 7))
+    assert(pruned.count() == full.count())
   }
 
   test("range join plans as an equi-join on the bucket key, not a nested loop") {
